@@ -1,11 +1,20 @@
 package graft
 
+import java.util.Locale
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   */
 object Bench {
+
+  /** A JSON number with `digits` decimals: `Locale.ROOT` keeps the decimal
+    * point a '.', which a comma-decimal default locale would not.
+    */
+  private def num(v: Double, digits: Int = 3): String =
+    s"%.${digits}f".formatLocal(Locale.ROOT, v)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -85,7 +94,7 @@ object Bench {
         val ts = samples(name).sorted
         name -> ts(ts.length / 2)
       }
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v) }
         .mkString("{", ",", "}")
       val total = results.map(_._2).sum
       // min-of-rounds published alongside the median: single runs on this
@@ -93,17 +102,17 @@ object Bench {
       // a per-query median >> min flags noise, not a plan regression — the
       // artifact self-documents which spikes to distrust
       val mins = names.map { case (name, _) => name -> samples(name).min }
-      val qsMin = mins.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      val qsMin = mins.map { case (k, v) => "\"" + k + "\":" + num(v) }
         .mkString("{", ",", "}")
       val totalMin = mins.map(_._2).sum
       // full per-query sample lists (newest-first) so a future reader can
       // adjudicate noise vs regression from the artifact alone
       val qsSamples = names.map { case (name, _) =>
         "\"" + name + "\":[" +
-          samples(name).map(t => f"$t%.3f").mkString(",") + "]"
+          samples(name).map(t => num(t)).mkString(",") + "]"
       }.mkString("{", ",", "}")
-      val loadRounds = loadPerRound.map(l => f"$l%.2f").mkString("[", ",", "]")
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"value_min":$totalMin%.3f,"queries_min":$qsMin,"samples":$qsSamples,"sf":"$sfDir","rounds":$roundsDone,"load_avg_before":$loadBefore%.2f,"load_avg_after":$loadNow%.2f,"load_per_round":$loadRounds,"settle_sec":$settleSec%.1f}"""
+      val loadRounds = loadPerRound.map(l => num(l, 2)).mkString("[", ",", "]")
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"value_min":${num(totalMin)},"queries_min":$qsMin,"samples":$qsSamples,"sf":"$sfDir","rounds":$roundsDone,"load_avg_before":${num(loadBefore, 2)},"load_avg_after":${num(loadNow, 2)},"load_per_round":$loadRounds,"settle_sec":${num(settleSec, 1)}}"""
     }
     // written after EVERY round (not just at exit): a harness that kills
     // a long multi-round run still finds the last completed round's
@@ -130,10 +139,10 @@ object Bench {
       val top = mins.sortBy(-_._2).take(20).map(_._1).toSet
       def m(kv: Seq[(String, Double)]): String = kv
         .filter { case (k, _) => top.contains(k) }
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+        .map { case (k, v) => "\"" + k + "\":" + num(v) }
         .mkString("{", ",", "}")
-      val loadRounds = loadPerRound.map(l => f"$l%.2f").mkString("[", ",", "]")
-      f"""{"metric":"total","value":${med.map(_._2).sum}%.3f,"unit":"sec","queries":${m(med)},"value_min":${mins.map(_._2).sum}%.3f,"queries_min":${m(mins)},"n_queries":${names.length},"top":20,"full_map":"$outPath","sf":"$sfDir","rounds":$roundsDone,"load_avg_before":$loadBefore%.2f,"load_avg_after":$loadNow%.2f,"load_per_round":$loadRounds,"settle_sec":$settleSec%.1f}"""
+      val loadRounds = loadPerRound.map(l => num(l, 2)).mkString("[", ",", "]")
+      s"""{"metric":"total","value":${num(med.map(_._2).sum)},"unit":"sec","queries":${m(med)},"value_min":${num(mins.map(_._2).sum)},"queries_min":${m(mins)},"n_queries":${names.length},"top":20,"full_map":"$outPath","sf":"$sfDir","rounds":$roundsDone,"load_avg_before":${num(loadBefore, 2)},"load_avg_after":${num(loadNow, 2)},"load_per_round":$loadRounds,"settle_sec":${num(settleSec, 1)}}"""
     }
     while (round < runs && {
       val elapsed = (System.nanoTime() - benchStart) / 1e9

@@ -1,6 +1,9 @@
 package graft.operators
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import java.util.regex.Pattern
+
+import scala.jdk.CollectionConverters._
 
 import graft.functions.{CanonicalRowHash, PyFormat}
 import graft.sources.Side
@@ -81,16 +84,20 @@ final class DriftCompare(
 
   import spark.implicits._
 
-  def sharedTables(): Seq[String] = {
-    val t1 = side1.listTables().toSet
-    val t2 = side2.listTables().toSet
-    t1.intersect(t2).toSeq.sorted.filter(config.tableSelected)
-  }
+  def sharedTables(): Seq[String] = sharedTables(side1.listTables(), side2.listTables())
 
   /** Tables present on exactly one side (reference: lotad/db_compare.py:118-147). */
-  def missingTableDrift(): Seq[MissingTableRow] = {
-    val t1 = side1.listTables().filter(config.tableSelected).toSet
-    val t2 = side2.listTables().filter(config.tableSelected).toSet
+  def missingTableDrift(): Seq[MissingTableRow] =
+    missingTableDrift(side1.listTables(), side2.listTables())
+
+  // Both take the sides' listings so `compareAll` lists each side once: a
+  // JDBC side opens a new connection for every `listTables()`.
+  private def sharedTables(l1: Seq[String], l2: Seq[String]): Seq[String] =
+    l1.toSet.intersect(l2.toSet).toSeq.sorted.filter(config.tableSelected)
+
+  private def missingTableDrift(l1: Seq[String], l2: Seq[String]): Seq[MissingTableRow] = {
+    val t1 = l1.filter(config.tableSelected).toSet
+    val t2 = l2.filter(config.tableSelected).toSet
     val only1 = (t1 -- t2).toSeq.sorted.map(MissingTableRow(_, side1.id, side2.id))
     val only2 = (t2 -- t1).toSeq.sorted.map(MissingTableRow(_, side2.id, side1.id))
     only1 ++ only2
@@ -172,6 +179,9 @@ final class DriftCompare(
     }
   }
 
+  /** Kept for API compatibility; the run-scan diff holds no session state. */
+  def cleanup(): Unit = ()
+
   /** Row-level drift for one shared table: rows (by canonical hash) present
     * on exactly one side. Output columns: intersection columns (sorted) +
     * `observed_in` + `hashed_row`
@@ -179,9 +189,6 @@ final class DriftCompare(
     * Returns None when the sides share no columns
     * (reference: lotad/db_compare.py:337-339).
     */
-  /** Kept for API compatibility; the run-scan diff holds no session state. */
-  def cleanup(): Unit = ()
-
   def dataDrift(table: String): Option[DataFrame] = {
     val in1 = dropIgnored(sideInput(side1, table), table)
     val in2 = dropIgnored(sideInput(side2, table), table)
@@ -270,27 +277,6 @@ final class DriftCompare(
       .filter(col("n_db1") =!= col("n_db2")))
   }
 
-  /** Hash-keyed twin of [[dataDriftBag]] for wide tables at scale: the
-    * multiplicity aggregation groups on `hashed_row` ALONE, so the shuffle
-    * carries (16-byte hash, two counts) per distinct row instead of the
-    * full row width — on a 100-column table that is ~two orders of
-    * magnitude less shuffle volume. Row values are attached afterwards by
-    * re-scanning one pass and broadcast-joining the (tiny) differing-hash
-    * set, then collapsing the identical copies per hash.
-    *
-    * Trade-off vs [[dataDriftBag]]: two scans instead of one, in exchange
-    * for shuffling hashes instead of rows — the right trade whenever row
-    * width x row count dwarfs a rescan (always, at the 100 TB design
-    * point; parquet scans parallelize freely, shuffles do not). Correctness
-    * rests on the canonical hash being collision-free across the table's
-    * distinct rows (128-bit md5: p ~ n^2 / 2^129).
-    *
-    * The differing-hash set is joined back WITHOUT a broadcast hint: its
-    * size is data-dependent (two heavily-diverged sides approach full
-    * distinct-row cardinality, past any broadcast/driver limit), so the
-    * strategy is left to AQE, which broadcasts exactly when the measured
-    * build side is small and falls back to a shuffled hash join otherwise.
-    */
   /** Default bag diff: dispatches on the normalized projection's width.
     * Narrow tables take the one-scan [[dataDriftBag]] (the full-row
     * shuffle is cheap when rows are a handful of columns); at or above
@@ -307,6 +293,27 @@ final class DriftCompare(
     else dataDriftBag(table)
   }
 
+  /** Hash-keyed twin of [[dataDriftBag]] for wide tables at scale: the
+    * multiplicity aggregation groups on `hashed_row` ALONE, so the shuffle
+    * carries (16-byte hash, two counts) per distinct row instead of the
+    * full row width — on a 100-column table that is ~two orders of
+    * magnitude less shuffle volume. Row values are attached afterwards by
+    * re-scanning one pass and broadcast-joining the (tiny) differing-hash
+    * set, then collapsing the identical copies per hash.
+    *
+    * Trade-off vs [[dataDriftBag]]: two scans instead of one, in exchange
+    * for shuffling hashes instead of rows — the right trade whenever row
+    * width x row count dwarfs a rescan (always, at the 100 TB design
+    * point; parquet scans parallelize freely, shuffles do not). Correctness
+    * rests on the canonical hash being collision-free across the table's
+    * distinct rows (64-bit xxh64: p ≈ n^2 / 2^65).
+    *
+    * The differing-hash set is joined back WITHOUT a broadcast hint: its
+    * size is data-dependent (two heavily-diverged sides approach full
+    * distinct-row cardinality, past any broadcast/driver limit), so the
+    * strategy is left to AQE, which broadcasts exactly when the measured
+    * build side is small and falls back to a shuffled hash join otherwise.
+    */
   def dataDriftBagHashed(table: String): Option[DataFrame] = {
     val in1 = dropIgnored(sideInput(side1, table), table)
     val in2 = dropIgnored(sideInput(side2, table), table)
@@ -349,35 +356,71 @@ final class DriftCompare(
   /** Full comparison across the catalog. Per-table diffs are independent
     * Spark jobs and run concurrently (reference fans out one OS process
     * per table, lotad/db_compare.py:192-217; we submit concurrent jobs in
-    * one session instead).
+    * one session instead). Only the drifted tables' frames stay cached. If
+    * any table fails, the first failure is thrown once every table has
+    * finished, and the frames already cached are unpersisted first.
     */
-  def compareAll(parallelism: Int = Runtime.getRuntime.availableProcessors().min(8)): DriftResult = {
-    import scala.concurrent._
-    import scala.concurrent.duration._
-    val shared = sharedTables()
+  def compareAll(parallelism: Int = FanOut.defaultWidth): DriftResult = {
+    val (l1, l2) = (side1.listTables(), side2.listTables())
+    val shared = sharedTables(l1, l2)
     val schema = shared.flatMap(schemaDrift)
-    val missing = missingTableDrift()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(parallelism, 1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val results =
-      try {
-        val futs = shared.map { t =>
-          Future {
-            dataDrift(t).map { df =>
-              val cached = df.persist()
-              val s = summarize(t, cached)
-              (t, cached, s)
-            }
-          }
-        }
-        Await.result(Future.sequence(futs), 24.hours).flatten
-      } finally pool.shutdown()
-    val withRows = results.filter { case (_, _, s) => s.rowsOnlyInDb1 + s.rowsOnlyInDb2 > 0 }
+    val missing = missingTableDrift(l1, l2)
+    type Diffed = Option[(String, DataFrame, DataDriftSummaryRow)]
+    val release = (r: Diffed) => r.foreach(_._2.unpersist())
+    val results = FanOut(shared, parallelism, release) { t =>
+      dataDrift(t).map { df =>
+        val cached = df.persist()
+        try (t, cached, summarize(t, cached))
+        catch { case e: Throwable => cached.unpersist(); throw e }
+      }
+    }.flatten
+    val (withRows, noRows) =
+      results.partition { case (_, _, s) => s.rowsOnlyInDb1 + s.rowsOnlyInDb2 > 0 }
+    // a table without drift is not in the result, so nothing else would free its cache
+    noRows.foreach(_._2.unpersist())
     DriftResult(
       schemaDrift = schema,
       missingTables = missing,
       dataDrift = withRows.map { case (t, df, _) => t -> df }.toMap,
       summary = withRows.map(_._3))
+  }
+}
+
+/** Runs independent Spark actions on a bounded thread pool: the one place
+  * that creates the pool, awaits the tasks and shuts the pool down.
+  * Threads are started by the calling thread, so they inherit its Spark
+  * local properties (job group, scheduler pool).
+  */
+private[operators] object FanOut {
+
+  val defaultWidth: Int = Runtime.getRuntime.availableProcessors().min(8)
+
+  /** `task` applied to every item, at most `width` at a time; results in
+    * item order. Returns or throws only after every task has finished. On
+    * failure, `release` is applied to each successful result, then the
+    * first failure in item order is thrown with the others suppressed.
+    * Only an interrupt of the calling thread returns early: it cancels the
+    * unfinished tasks and throws `InterruptedException`.
+    */
+  def apply[A, B](items: Seq[A], width: Int, release: B => Unit = (_: B) => ())(
+      task: A => B): Seq[B] = {
+    if (items.isEmpty) return Seq.empty
+    val pool = Executors.newFixedThreadPool(width.max(1).min(items.size))
+    val outcomes =
+      try {
+        val calls = items.map(a => (() => task(a)): Callable[B])
+        // invokeAll returns once every task is done, successful or not
+        pool.invokeAll(calls.asJava).asScala.toSeq.map { f =>
+          try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) }
+        }
+      } finally pool.shutdown()
+    val results = outcomes.collect { case Right(b) => b }
+    val failures = outcomes.collect { case Left(e) => e }.distinct
+    if (failures.isEmpty) return results
+    val first = failures.head
+    failures.tail.foreach(first.addSuppressed)
+    results.foreach(b => try release(b) catch { case e: Throwable => first.addSuppressed(e) })
+    throw first
   }
 }
 
@@ -421,17 +464,23 @@ object DriftOutput {
   /** Write the whole result as a directory of Parquet tables: one per
     * drifted table plus the three summary tables — the Spark analog of the
     * reference's result DuckDB file (reference: lotad/data_analysis.py:143-168).
+    * The tables are independent, so their write jobs are submitted
+    * together, at most `compareAll`'s default width at a time; a failed
+    * write is thrown once every other write has finished. A drifted table
+    * named like a summary table (e.g. when diffing two result stores) is
+    * refused: both would be written into one directory at once.
     */
   def write(spark: SparkSession, result: DriftResult, outDir: String): Unit = {
-    result.dataDrift.foreach { case (t, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/$t")
+    val summaries = Seq(
+      "lotad_table_schema_drift" -> schemaDriftDf(spark, result.schemaDrift),
+      "lotad_missing_table_drift" -> missingTablesDf(spark, result.missingTables),
+      "lotad_db_data_drift_summary" -> summaryDf(spark, result.summary))
+    val clash = summaries.map(_._1).filter(result.dataDrift.contains)
+    require(clash.isEmpty, s"drifted tables ${clash.mkString(", ")} would overwrite summary tables")
+    val tables = result.dataDrift.toSeq ++ summaries
+    FanOut(tables, FanOut.defaultWidth) { case (name, df) =>
+      df.write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    schemaDriftDf(spark, result.schemaDrift).write.mode("overwrite")
-      .parquet(s"$outDir/lotad_table_schema_drift")
-    missingTablesDf(spark, result.missingTables).write.mode("overwrite")
-      .parquet(s"$outDir/lotad_missing_table_drift")
-    summaryDf(spark, result.summary).write.mode("overwrite")
-      .parquet(s"$outDir/lotad_db_data_drift_summary")
   }
 
   /** Text report, byte-identical to the reference's Jinja rendering
